@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -29,38 +29,14 @@ import graft.ops.ConnectedComponents
   * its observed-diameter switch — near-clique merges converge in 1–2
   * rounds because the stars are already depth-1.
   *
-  * Exactly-once protocol (the [[IncrementalCooccur]]/[[IncrementalPack]]
-  * idiom): batch N OVERWRITES its own store version `v=N` derived only
-  * from `v=N-1` and the batch data, so a crash-replayed batch rewrites
-  * an identical version instead of drifting; a missing predecessor
-  * version fails fast rather than silently dropping history.
+  * Versions follow [[StoreProtocol]]: recomputing from only the live
+  * batch while earlier versions existed would silently split every
+  * previously-merged cluster.
   */
 object IncrementalComponents {
 
-  private def versionDir(storeDir: String, batchId: Long) = s"$storeDir/v=$batchId"
-
   private val labelSchema = StructType(Seq(
     StructField("node", LongType), StructField("component", LongType)))
-
-  /** Labels of store version `batchId − 1` (empty for batch 0). FAILS
-    * FAST when batchId > 0 and `v=N-1` is absent — recomputing from
-    * only the current batch while earlier versions existed would
-    * silently split every previously-merged cluster.
-    */
-  def readLabels(spark: SparkSession, storeDir: String,
-                 batchId: Long): DataFrame = {
-    if (batchId == 0)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], labelSchema)
-    val prev = versionDir(storeDir, batchId - 1)
-    val prevPath = new org.apache.hadoop.fs.Path(prev)
-    val fs = prevPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(prevPath)) throw new IllegalStateException(
-      s"IncrementalComponents store version missing: $prev does not exist " +
-        s"but batch $batchId is not the first. Refusing to relabel from only " +
-        "the live batch — restore the store or reset checkpoint+store together.")
-    StoreProtocol.requireCommitted(fs, prevPath, "IncrementalComponents", batchId)
-    spark.read.parquet(prev)
-  }
 
   /** Merge one batch of edges into the store: version N's labels = CC
     * over (version N−1's stars ∪ batch edges). Pure in (store version
@@ -69,14 +45,14 @@ object IncrementalComponents {
   def processBatch(batch: Dataset[Row], batchId: Long, storeDir: String,
                    srcCol: String = "s", dstCol: String = "t"): DataFrame = {
     val spark = batch.sparkSession
-    val stars = readLabels(spark, storeDir, batchId)
+    val stars = StoreProtocol.readPrev(spark, storeDir, batchId, "IncrementalComponents")
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], labelSchema))
       .select(col("node").as("__s"), col("component").as("__t"))
     val e = batch.toDF()
       .select(col(srcCol).cast("long").as("__s"), col(dstCol).cast("long").as("__t"))
       .unionByName(stars)
     val labels = ConnectedComponents.labelPropagation(e, "__s", "__t")
-    labels.write.mode("overwrite").parquet(versionDir(storeDir, batchId))
-    spark.read.parquet(versionDir(storeDir, batchId))
+    StoreProtocol.commit(labels, storeDir, batchId)
   }
 
   /** Wire an edge stream into the incremental maintainer. */

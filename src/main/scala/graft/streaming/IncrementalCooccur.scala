@@ -1,6 +1,5 @@
 package graft.streaming
 
-
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -20,15 +19,10 @@ import graft.ops.{IncrementalAgg, TopK}
   * its pairs. Order-atomic delivery is the natural shape of
   * transactional CDC ingestion.
   *
-  * Exactly-once protocol (the [[IncrementalPack]] idiom): batch N
-  * OVERWRITES its own store version `v=N` derived only from `v=N-1` and
-  * the batch data, so a crash-replayed batch rewrites an identical
-  * version instead of double-counting; a missing predecessor version
-  * fails fast rather than silently restarting counts from zero.
+  * Versions follow [[StoreProtocol]], with three legs per version
+  * (`pairs`, `parts`, `meta`), each committed by its own write.
   */
 object IncrementalCooccur {
-
-  private def versionDir(storeDir: String, batchId: Long) = s"$storeDir/v=$batchId"
 
   private val pairSchema = StructType(Seq(
     StructField("pa", LongType), StructField("pb", LongType),
@@ -53,36 +47,17 @@ object IncrementalCooccur {
     (pairs, parts, meta)
   }
 
-  /** The predecessor store (empty frames for batch 0). FAILS FAST when
-    * batchId > 0 and `v=N-1` is absent — re-counting from zero while
-    * earlier versions existed would silently corrupt the artifact.
-    */
+  /** The predecessor store (empty frames for batch 0). */
   def readStore(spark: SparkSession, storeDir: String,
-                batchId: Long): (DataFrame, DataFrame, DataFrame) = {
-    def empty(s: StructType) =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
-    if (batchId == 0) (empty(pairSchema), empty(partSchema), empty(metaSchema))
-    else {
-      val prev = versionDir(storeDir, batchId - 1)
-      // Resolve existence through the Hadoop FileSystem of the path itself
-      // so the store protocol works on any Spark-supported filesystem
-      // (hdfs://, s3a://, ...) — java.nio only understands local paths.
-      val prevPath = new org.apache.hadoop.fs.Path(prev)
-      val fs = prevPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(prevPath)) throw new IllegalStateException(
-        s"IncrementalCooccur store version missing: $prev does not exist but " +
-          s"batch $batchId is not the first. Refusing to restart counts from " +
-          "zero — restore the store or reset checkpoint+store together.")
-      // all three legs commit independently — each carries its own marker
-      Seq("pairs", "parts", "meta").foreach { leg =>
-        StoreProtocol.requireCommitted(fs,
-          new org.apache.hadoop.fs.Path(s"$prev/$leg"), "IncrementalCooccur",
-          batchId)
-      }
-      (spark.read.parquet(s"$prev/pairs"), spark.read.parquet(s"$prev/parts"),
-        spark.read.parquet(s"$prev/meta"))
+                batchId: Long): (DataFrame, DataFrame, DataFrame) =
+    if (batchId == 0) {
+      def empty(s: StructType) = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
+      (empty(pairSchema), empty(partSchema), empty(metaSchema))
+    } else {
+      val legs = StoreProtocol.readLegs(spark, storeDir, batchId - 1,
+        "IncrementalCooccur", Seq("pairs", "parts", "meta"))
+      (legs(0), legs(1), legs(2))
     }
-  }
 
   /** Merge one batch into the store: version N = version N-1 + batch.
     * Pure in (store version N-1, batch) — replay-idempotent.
@@ -91,7 +66,7 @@ object IncrementalCooccur {
     val spark = batch.sparkSession
     val (prevPairs, prevParts, prevMeta) = readStore(spark, storeDir, batchId)
     val (dPairs, dParts, dMeta) = batchCounts(batch.toDF())
-    val out = versionDir(storeDir, batchId)
+    val out = StoreProtocol.versionDir(storeDir, batchId)
     IncrementalAgg.merge(Seq(prevPairs, dPairs), Seq("pa", "pb"), sumCols = Seq("n_ab"))
       .write.mode("overwrite").parquet(s"$out/pairs")
     IncrementalAgg.merge(Seq(prevParts, dParts), Seq("p"), sumCols = Seq("c"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
 /** Incrementally maintained per-key exact moments (count, sum, sum of
@@ -11,33 +11,10 @@ import org.apache.spark.sql.functions._
   * the event corpus. The add-based member of the family: counts and
   * sums are plain integer adds — commutative across batch order and
   * partitioning, so the store is bit-identical to a one-shot aggregate
-  * of the union — but not duplicate-immune, hence the shared
-  * version-overwrite protocol (batch N rewrites its own `v=N` derived
-  * only from `v=N−1` + the batch; a missing predecessor fails fast; a
-  * torn predecessor trips [[StoreProtocol.requireCommitted]]).
+  * of the union — but not duplicate-immune, hence the
+  * [[StoreProtocol]] version overwrite.
   */
 object IncrementalDailyMoments {
-
-  private def versionDir(storeDir: String, batchId: Long) = s"$storeDir/v=$batchId"
-
-  /** Store version `batchId − 1` (None for batch 0); fails fast on a
-    * missing or torn non-initial predecessor.
-    */
-  def readMoments(spark: SparkSession, storeDir: String,
-                  batchId: Long): Option[DataFrame] = {
-    if (batchId == 0) return None
-    val prev = versionDir(storeDir, batchId - 1)
-    val prevPath = new org.apache.hadoop.fs.Path(prev)
-    val fs = prevPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(prevPath)) throw new IllegalStateException(
-      s"IncrementalDailyMoments store version missing: $prev does not " +
-        s"exist but batch $batchId is not the first. Refusing to restart " +
-        "the moments from only the live batch — restore the store or " +
-        "reset checkpoint+store together.")
-    StoreProtocol.requireCommitted(fs, prevPath, "IncrementalDailyMoments",
-      batchId)
-    Some(spark.read.parquet(prev))
-  }
 
   /** Fold one batch of (key..., value) rows into the store: version N's
     * (n, s, ss) = version N−1's + the batch's own partial per key,
@@ -59,7 +36,7 @@ object IncrementalDailyMoments {
         sum(v.cast("decimal(38,0)")).as("s"),
         sum(v.cast("decimal(38,0)") * v).as("ss"))
     def z = lit(0L).cast("decimal(38,0)")
-    val merged = readMoments(spark, storeDir, batchId) match {
+    val merged = StoreProtocol.readPrev(spark, storeDir, batchId, "IncrementalDailyMoments") match {
       case None => bs
       case Some(prev) =>
         bs.withColumnRenamed("n", "__bn").withColumnRenamed("s", "__bs")
@@ -75,8 +52,7 @@ object IncrementalDailyMoments {
             (coalesce(col("__bq"), z) + coalesce(col("__pq"), z))
               .cast("decimal(38,0)").as("ss")): _*)
     }
-    merged.write.mode("overwrite").parquet(versionDir(storeDir, batchId))
-    spark.read.parquet(versionDir(storeDir, batchId))
+    StoreProtocol.commit(merged, storeDir, batchId)
   }
 
   /** Wire a (key..., value) stream into the incremental maintainer. */

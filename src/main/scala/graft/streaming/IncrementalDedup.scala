@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.llm.DedupOps
 import graft.ops.ConnectedComponents
@@ -59,15 +59,13 @@ import graft.ops.ConnectedComponents
   *    id-equi and AQE sizes it. At extreme history/batch ratios the
   *    [[graft.ops.BloomPrune]] idiom drops non-candidate doc rows at
   *    the scan.
-  *  - Per-batch dir count grows linearly in batches; the
-  *    [[IncrementalIvf.compact]] generation protocol applies verbatim
-  *    to `sigs`/`docs` (same layout: partitioned parquet under
-  *    versioned dirs).
+  *  - Per-batch dir count grows linearly in batches; [[compact]]
+  *    folds them into generations.
   *
-  * Exactly-once: batch N derives only from dirs `batch<N` and the batch
-  * data, and OVERWRITES its own `batch=N` dir — a crash-replayed batch
-  * rewrites identical files ([[IncrementalPack]] idiom). The spec pins
-  * replay identity and the no-admitted-near-dup invariant.
+  * Batches and generations follow [[GenStore]]. Replaying a batch a
+  * generation already folded fails fast: the batch would see its own
+  * admitted docs as history and reject everything as a dup of itself.
+  * The spec pins replay identity and the no-admitted-near-dup invariant.
   */
 object IncrementalDedup {
 
@@ -80,51 +78,8 @@ object IncrementalDedup {
   final case class Config(bands: Int = 4, rowsPerBand: Int = 2,
                           tau: Double = 0.5, sigBuckets: Int = 64)
 
-  private def batchDir(storeDir: String, id: Long) = f"$storeDir/batch=$id"
-
-  private def decisionSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
-    StructField("admitted", BooleanType, nullable = false),
-    StructField("dup_of", LongType, nullable = true)))
-
-  /** The store's readable parts covering batches `< upTo`: the newest
-    * committed generation (which folds batches ≤ its high-water mark)
-    * plus the live `batch=N` dirs above it. Generations share the batch
-    * dirs' internal layout (`sigs`/`docs`/`decisions`), so readers
-    * treat both uniformly. FAILS FAST when a generation has folded
-    * batch `upTo` itself or beyond — replaying a batch after its output
-    * was folded would let the batch see its own admitted docs as
-    * history and reject everything as a dup of itself; compaction is a
-    * between-batches maintenance step, never concurrent with a replay
-    * window (the [[IncrementalCooccur]] fail-fast discipline).
-    */
-  private def storeParts(spark: SparkSession, storeDir: String,
-                         upTo: Long): Seq[String] =
-    GenStore.latestCompaction(spark, storeDir) match {
-      case Some((g, mb)) =>
-        if (mb >= upTo) throw new IllegalStateException(
-          s"IncrementalDedup: batch $upTo would replay but generation $g already " +
-            s"folded batches <= $mb - its own output would screen itself. " +
-            "Reset checkpoint+store together, or compact only between batches.")
-        GenStore.genDir(storeDir, g) +:
-          GenStore.liveBatchIds(spark, storeDir, mb).filter(_ < upTo)
-            .map(b => s"$storeDir/batch=$b")
-      case None =>
-        GenStore.liveBatchIds(spark, storeDir, -1L).filter(_ < upTo)
-          .map(b => s"$storeDir/batch=$b")
-    }
-
-  /** Union of one sub-store (`sigs`/`docs`/`decisions`) across parts —
-    * one single-root read per part (sibling partitioned trees trip
-    * multi-root discovery), skipping parts without data. None when no
-    * part has any.
-    */
-  private def readSub(spark: SparkSession, storeDir: String,
-                      parts: Seq[String], sub: String): Option[DataFrame] = {
-    val ps = GenStore.nonEmptyPaths(spark, storeDir, parts.map(_ + "/" + sub))
-    if (ps.isEmpty) None
-    else Some(ps.map(spark.read.parquet(_)).reduce(_ unionByName _))
-  }
+  private val Subs = Seq(GenStore.Sub("sigs", Some("sb")), GenStore.Sub("docs"),
+    GenStore.Sub("decisions"))
 
   /** Screen one micro-batch and commit its admitted docs + decisions.
     *
@@ -158,12 +113,12 @@ object IncrementalDedup {
       .cache()
 
     // ---- 1. history screen -------------------------------------------
-    val prior = storeParts(spark, storeDir, batchId)
+    val prior = GenStore.storeParts(spark, storeDir, "IncrementalDedup", batchId)
     val emptyDups = () => spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       StructType(Seq(StructField("id", LongType), StructField("dup_of", LongType))))
     val histDups: DataFrame =
-      readSub(spark, storeDir, prior, "sigs").zip(
-          readSub(spark, storeDir, prior, "docs")) match {
+      GenStore.readSub(spark, storeDir, prior, "sigs").zip(
+          GenStore.readSub(spark, storeDir, prior, "docs")) match {
         case None => emptyDups()
         case Some((allHistSigs, histDocs)) =>
           // Bounded driver pull: distinct signature buckets of THIS batch
@@ -204,7 +159,7 @@ object IncrementalDedup {
     val decisions = dedupped.select("id")
       .join(rejected, Seq("id"), "left")
       .select(col("id"), col("dup_of").isNull.as("admitted"), col("dup_of"))
-    val dir = batchDir(storeDir, batchId)
+    val dir = GenStore.batchDir(storeDir, batchId)
     // decisions first is NOT the commit point — every dir is rewritten
     // on replay; readers of a half-written batch dir are out of scope
     // (the store is read between batches, as the spec stages it).
@@ -245,38 +200,18 @@ object IncrementalDedup {
     * (generation + live batches).
     */
   def admitted(spark: SparkSession, storeDir: String): DataFrame =
-    readSub(spark, storeDir, storeParts(spark, storeDir, Long.MaxValue), "docs")
-      .getOrElse(sys.error(s"IncrementalDedup store empty: $storeDir"))
+    GenStore.read(spark, storeDir, "IncrementalDedup", "docs")
 
   /** Every admission decision (id, admitted, dup_of) across the store. */
   def decisions(spark: SparkSession, storeDir: String): DataFrame =
-    readSub(spark, storeDir, storeParts(spark, storeDir, Long.MaxValue), "decisions")
-      .getOrElse(sys.error(s"IncrementalDedup store empty: $storeDir"))
+    GenStore.read(spark, storeDir, "IncrementalDedup", "decisions")
 
-  /** Fold every live batch into generation latest+1 — the
-    * [[GenStore]] protocol over the three sub-stores. Per-batch file
+  /** Fold every live batch into generation latest+1
+    * ([[GenStore.compact]] over the three sub-stores). Per-batch file
     * counts otherwise grow linearly in batch count (each micro-batch
     * adds up to one file per signature bucket); compaction keeps the
-    * history read O(sigBuckets) files. Call BETWEEN batches (a
-    * maintenance trigger, the [[IncrementalIvf.compact]] cadence);
-    * [[storeParts]] fail-fasts if a replayable batch was folded.
+    * history read O(sigBuckets) files. Call BETWEEN batches.
     */
-  def compact(spark: SparkSession, storeDir: String): Unit = {
-    val prev = GenStore.latestCompaction(spark, storeDir)
-    val prevMax = prev.map(_._2).getOrElse(-1L)
-    val live = GenStore.liveBatchIds(spark, storeDir, prevMax)
-    if (live.nonEmpty) {
-      val newGen = prev.map(_._1).getOrElse(0L) + 1
-      val parts = prev.map { case (g, _) => GenStore.genDir(storeDir, g) }.toSeq ++
-        live.map(b => s"$storeDir/batch=$b")
-      val dst = GenStore.genDir(storeDir, newGen)
-      for ((sub, partBy) <- Seq(("sigs", Some("sb")), ("docs", None), ("decisions", None)))
-        readSub(spark, storeDir, parts, sub).foreach { df =>
-          val w = df.write.mode("overwrite")
-          partBy.fold(w)(c => w.partitionBy(c)).parquet(s"$dst/$sub")
-        }
-      GenStore.commitManifest(spark, storeDir, newGen, live.max)
-    }
-    GenStore.cleanup(spark, storeDir)
-  }
+  def compact(spark: SparkSession, storeDir: String): Unit =
+    GenStore.compact(spark, storeDir, Subs)
 }

@@ -48,6 +48,8 @@ import graft.ops.EntityResolution
   *   batch=N/map/         (name, canonical) — decisions for batch N's fresh names
   *   _compacted/v=G/      both sub-stores folded by [[compact]]
   * }}}
+  * Batches and generations follow [[GenStore]]; replaying a folded
+  * batch fails fast (it would screen against its own output).
   *
   * 100 TB shape: the store holds the entity VOCABULARY (names), not
   * facts. The history screen prunes the canonical read to the batch's
@@ -67,8 +69,6 @@ object IncrementalEntityResolution {
   final case class Config(threshold: Double = 0.86, maxLenDiff: Int = 3,
                           blkBuckets: Int = 64)
 
-  private def batchDir(storeDir: String, id: Long) = f"$storeDir/batch=$id"
-
   /** Block key: first character (the q167 scheme — swap here to change
     * the blocking for the whole store, then reset it).
     */
@@ -77,33 +77,7 @@ object IncrementalEntityResolution {
   private def bk(name: org.apache.spark.sql.Column, buckets: Int) =
     pmod(xxhash64(blk(name)), lit(buckets)).cast("int")
 
-  /** Readable parts for batch `upTo` (newest committed generation +
-    * live batch dirs above its high-water mark) — the [[GenStore]]
-    * protocol with the [[IncrementalDedup]] fail-fast: replaying a
-    * folded batch would screen a batch against its own output.
-    */
-  private def storeParts(spark: SparkSession, storeDir: String,
-                         upTo: Long): Seq[String] =
-    GenStore.latestCompaction(spark, storeDir) match {
-      case Some((g, mb)) =>
-        if (mb >= upTo) throw new IllegalStateException(
-          s"IncrementalEntityResolution: batch $upTo would replay but generation $g " +
-            s"already folded batches <= $mb. Reset checkpoint+store together, " +
-            "or compact only between batches.")
-        GenStore.genDir(storeDir, g) +:
-          GenStore.liveBatchIds(spark, storeDir, mb).filter(_ < upTo)
-            .map(b => s"$storeDir/batch=$b")
-      case None =>
-        GenStore.liveBatchIds(spark, storeDir, -1L).filter(_ < upTo)
-          .map(b => s"$storeDir/batch=$b")
-    }
-
-  private def readSub(spark: SparkSession, storeDir: String,
-                      parts: Seq[String], sub: String): Option[DataFrame] = {
-    val ps = GenStore.nonEmptyPaths(spark, storeDir, parts.map(_ + "/" + sub))
-    if (ps.isEmpty) None
-    else Some(ps.map(spark.read.parquet(_)).reduce(_ unionByName _))
-  }
+  private val Store = "IncrementalEntityResolution"
 
   /** Resolve one micro-batch of names and commit its decisions. */
   def processBatch(batch: DataFrame, batchId: Long, nameCol: String,
@@ -117,10 +91,10 @@ object IncrementalEntityResolution {
         blk(col("name")).as("__blk"), length(col("name")).as("__len"))
       .cache()
 
-    val prior = storeParts(spark, storeDir, batchId)
+    val prior = GenStore.storeParts(spark, storeDir, Store, batchId)
 
     // ---- 1. re-arrivals keep their mapping, write nothing ------------
-    val fresh = readSub(spark, storeDir, prior, "map") match {
+    val fresh = GenStore.readSub(spark, storeDir, prior, "map") match {
       case None => names
       case Some(histMap) =>
         names.join(histMap.select(col("name")), Seq("name"), "left_anti")
@@ -128,7 +102,7 @@ object IncrementalEntityResolution {
     val freshCached = fresh.cache()
 
     // ---- 2. history screen against existing canonicals ---------------
-    val histMatched: DataFrame = readSub(spark, storeDir, prior, "canon") match {
+    val histMatched: DataFrame = GenStore.readSub(spark, storeDir, prior, "canon") match {
       case None => freshCached.limit(0).select(col("name"),
         col("name").as("canonical"))
       case Some(allCanon) =>
@@ -154,7 +128,7 @@ object IncrementalEntityResolution {
     val inBatch = EntityResolution.canonicalize(un, "name", pairs)
 
     // ---- commit -------------------------------------------------------
-    val dir = batchDir(storeDir, batchId)
+    val dir = GenStore.batchDir(storeDir, batchId)
     val decisions = histMatchedCached.unionByName(inBatch)
     decisions.write.mode("overwrite").parquet(s"$dir/map")
     inBatch.filter(col("name") === col("canonical"))
@@ -187,34 +161,17 @@ object IncrementalEntityResolution {
 
   /** The full (name, canonical) mapping across the store. */
   def resolve(spark: SparkSession, storeDir: String): DataFrame =
-    readSub(spark, storeDir, storeParts(spark, storeDir, Long.MaxValue), "map")
-      .getOrElse(sys.error(s"IncrementalEntityResolution store empty: $storeDir"))
+    GenStore.read(spark, storeDir, Store, "map")
 
   /** All admitted canonical names (with their block bucket). */
   def canonicals(spark: SparkSession, storeDir: String): DataFrame =
-    readSub(spark, storeDir, storeParts(spark, storeDir, Long.MaxValue), "canon")
-      .getOrElse(sys.error(s"IncrementalEntityResolution store empty: $storeDir"))
+    GenStore.read(spark, storeDir, Store, "canon")
 
-  /** Fold live batches into the next generation ([[GenStore]]); keeps
-    * the canonical-store read O(blkBuckets) files. Call between
-    * batches; [[storeParts]] fail-fasts if a replayable batch was folded.
+  /** Fold live batches into the next generation ([[GenStore.compact]]);
+    * keeps the canonical-store read O(blkBuckets) files. Call between
+    * batches.
     */
-  def compact(spark: SparkSession, storeDir: String): Unit = {
-    val prev = GenStore.latestCompaction(spark, storeDir)
-    val prevMax = prev.map(_._2).getOrElse(-1L)
-    val live = GenStore.liveBatchIds(spark, storeDir, prevMax)
-    if (live.nonEmpty) {
-      val newGen = prev.map(_._1).getOrElse(0L) + 1
-      val parts = prev.map { case (g, _) => GenStore.genDir(storeDir, g) }.toSeq ++
-        live.map(b => s"$storeDir/batch=$b")
-      val dst = GenStore.genDir(storeDir, newGen)
-      for ((sub, partBy) <- Seq(("canon", Some("bk")), ("map", None)))
-        readSub(spark, storeDir, parts, sub).foreach { df =>
-          val w = df.write.mode("overwrite")
-          partBy.fold(w)(c => w.partitionBy(c)).parquet(s"$dst/$sub")
-        }
-      GenStore.commitManifest(spark, storeDir, newGen, live.max)
-    }
-    GenStore.cleanup(spark, storeDir)
-  }
+  def compact(spark: SparkSession, storeDir: String): Unit =
+    GenStore.compact(spark, storeDir,
+      Seq(GenStore.Sub("canon", Some("bk")), GenStore.Sub("map")))
 }

@@ -28,35 +28,10 @@ import graft.ops.Forecast
   * Keys absent from a batch carry their state forward untouched; keys
   * born in batch N initialize exactly as the batch fold does
   * (l₀ = first y, b₀ = 0). Work per batch is |store keys| + |batch
-  * rows| — history is never re-read, never retained.
-  *
-  * Exactly-once protocol (the [[IncrementalComponents]] idiom): batch
-  * N OVERWRITES its own store version `v=N` derived only from `v=N−1`
-  * and the batch data, so a crash-replayed batch rewrites an identical
-  * version; a missing predecessor version fails fast.
+  * rows| — history is never re-read, never retained. Versions follow
+  * [[StoreProtocol]].
   */
 object IncrementalForecast {
-
-  private def versionDir(storeDir: String, batchId: Long) = s"$storeDir/v=$batchId"
-
-  /** State of store version `batchId − 1` (None for batch 0). FAILS
-    * FAST when batchId > 0 and `v=N-1` is absent — reinitializing from
-    * only the live batch would silently restart every series.
-    */
-  def readState(spark: SparkSession, storeDir: String,
-                batchId: Long): Option[DataFrame] = {
-    if (batchId == 0) return None
-    val prev = versionDir(storeDir, batchId - 1)
-    val prevPath = new org.apache.hadoop.fs.Path(prev)
-    val fs = prevPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(prevPath)) throw new IllegalStateException(
-      s"IncrementalForecast store version missing: $prev does not exist " +
-        s"but batch $batchId is not the first. Refusing to restart the " +
-        "series from only the live batch — restore the store or reset " +
-        "checkpoint+store together.")
-    StoreProtocol.requireCommitted(fs, prevPath, "IncrementalForecast", batchId)
-    Some(spark.read.parquet(prev))
-  }
 
   /** Fold one batch of observations into the store: version N's state
     * = version N−1's state advanced by the batch's time-ordered
@@ -76,7 +51,7 @@ object IncrementalForecast {
         count(lit(1)).as("__bn"),
         min(col("__e").getField("t")).as("__tmin"),
         max(col("__e").getField("t")).as("__tmax"))
-    val joined = readState(spark, storeDir, batchId) match {
+    val joined = StoreProtocol.readPrev(spark, storeDir, batchId, "IncrementalForecast") match {
       case Some(p) =>
         arr.join(p.select(keys.map(col) :+ col("n_obs").as("__pn") :+
           col("tmax").as("__ptmax") :+ col("l").as("__pl") :+
@@ -120,18 +95,18 @@ object IncrementalForecast {
         coalesce(col("__tmax"), col("__ptmax")).as("tmax") :+
         st.getField("l").as("l") :+ st.getField("b").as("b") :+
         st.getField("sae").as("sae") :+ st.getField("n").as("nsc"): _*)
-    out.write.mode("overwrite").parquet(versionDir(storeDir, batchId))
-    spark.read.parquet(versionDir(storeDir, batchId))
+    StoreProtocol.commit(out, storeDir, batchId)
   }
 
   /** The [[Forecast.holtBacktest]]-shaped view of a committed store
     * version: (keys…, n_obs, mae, level, trend), same rounding — the
     * cross-check surface (bit-identical to the batch fold over the
-    * union of all batches so far).
+    * union of all batches so far). Fails fast on a missing or torn
+    * version, like every [[StoreProtocol]] read.
     */
   def backtest(spark: SparkSession, storeDir: String, batchId: Long,
                keys: Seq[String]): DataFrame =
-    spark.read.parquet(versionDir(storeDir, batchId))
+    StoreProtocol.read(spark, storeDir, batchId, "IncrementalForecast")
       .select(keys.map(col) :+ col("n_obs") :+
         round(col("sae") / greatest(col("nsc"), lit(1.0)), 6).as("mae") :+
         round(col("l"), 6).as("level") :+

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
 import graft.engine.expressions.Hll
@@ -19,31 +19,9 @@ import graft.engine.expressions.Hll
   * pass through unchanged (full-outer fold), so new groups may appear
   * in any batch.
   *
-  * Exactly-once protocol (the family idiom): batch N OVERWRITES its
-  * own `v=N` derived only from `v=N-1` + the batch; missing
-  * predecessor fails fast.
+  * Versions follow [[StoreProtocol]].
   */
 object IncrementalHll {
-
-  private def versionDir(storeDir: String, batchId: Long) = s"$storeDir/v=$batchId"
-
-  /** Sketches of store version `batchId − 1` (None for batch 0); fails
-    * fast when a non-initial predecessor is missing.
-    */
-  def readSketches(spark: SparkSession, storeDir: String,
-                   batchId: Long): Option[DataFrame] = {
-    if (batchId == 0) return None
-    val prev = versionDir(storeDir, batchId - 1)
-    val prevPath = new org.apache.hadoop.fs.Path(prev)
-    val fs = prevPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(prevPath)) throw new IllegalStateException(
-      s"IncrementalHll store version missing: $prev does not exist " +
-        s"but batch $batchId is not the first. Refusing to restart the " +
-        "registers from only the live batch — restore the store or reset " +
-        "checkpoint+store together.")
-    StoreProtocol.requireCommitted(fs, prevPath, "IncrementalHll", batchId)
-    Some(spark.read.parquet(prev))
-  }
 
   /** Fold one batch of (group, item) rows into the store: version N's
     * registers = max(version N−1, batch's own sketch) elementwise per
@@ -57,7 +35,7 @@ object IncrementalHll {
     Hll.register(spark)
     val bs = batch.toDF().groupBy(groupCols.map(col): _*)
       .agg(Hll.sketch(col(itemCol), p).as("sk"))
-    val merged = readSketches(spark, storeDir, batchId) match {
+    val merged = StoreProtocol.readPrev(spark, storeDir, batchId, "IncrementalHll") match {
       case None => bs
       case Some(prev) =>
         bs.withColumnRenamed("sk", "__bsk")
@@ -68,8 +46,7 @@ object IncrementalHll {
               .otherwise(zip_with(col("__bsk"), col("__psk"),
                 (a, b) => greatest(a, b))).as("sk"): _*)
     }
-    merged.write.mode("overwrite").parquet(versionDir(storeDir, batchId))
-    spark.read.parquet(versionDir(storeDir, batchId))
+    StoreProtocol.commit(merged, storeDir, batchId)
   }
 
   /** Wire a (group, item) stream into the incremental maintainer. */

@@ -27,12 +27,10 @@ import graft.llm.TextOps
   * write (no shuffle of the existing index); a probe reads
   * |terms|/nBuckets of the index directories, scores only matched
   * postings, and ranks with a TakeOrdered — no global sort, no
-  * full-index pass anywhere. Exactly-once identical to the GenStore
-  * family: batch dirs overwrite idempotently on replay, compaction
-  * commits by manifest rename (both sub-stores fold; each is
-  * individually consistent, and a probe racing ingestion sees at most
-  * one batch's postings/stats skew — bounded staleness, exact at
-  * rest; IncrementalIndexSpec pins probe equality with the batch
+  * full-index pass anywhere. Both sub-stores fold independently, each
+  * individually consistent, so a probe racing ingestion sees at most
+  * one batch's postings/stats skew — bounded staleness, exact at rest
+  * (IncrementalIndexSpec pins probe equality with the batch
   * [[graft.llm.Bm25]] scorer).
   */
 object IncrementalIndex {
@@ -56,9 +54,9 @@ object IncrementalIndex {
       .groupBy("term", "doc_id", "dl").agg(count(lit(1)).cast("int").as("tf"))
       .withColumn("bucket", bucketOf(col("term")))
     postings.write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"${postingsDir(root)}/batch=$batchId")
+      .parquet(GenStore.batchDir(postingsDir(root), batchId))
     toks.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .write.mode("overwrite").parquet(s"${statsDir(root)}/batch=$batchId")
+      .write.mode("overwrite").parquet(GenStore.batchDir(statsDir(root), batchId))
   }
 
   /** Wire a documents stream into the index. */
@@ -75,20 +73,9 @@ object IncrementalIndex {
       }
       .start()
 
-  private def readSub(spark: SparkSession, dir: String): DataFrame =
-    GenStore.latestCompaction(spark, dir) match {
-      case None => spark.read.parquet(dir)
-      case Some((gen, maxBatch)) =>
-        val compacted = spark.read.parquet(GenStore.genDir(dir, gen))
-        GenStore.nonEmptyPaths(spark, dir,
-            GenStore.liveBatchIds(spark, dir, maxBatch).map(b => s"$dir/batch=$b"))
-          .map(spark.read.parquet(_))
-          .foldLeft(compacted)(_ unionByName _)
-    }
-
   /** The postings relation (bucket, term, doc_id, tf, dl). */
   def readPostings(spark: SparkSession, root: String): DataFrame =
-    readSub(spark, postingsDir(root))
+    GenStore.read(spark, postingsDir(root), "IncrementalIndex")
 
   /** BM25 top-k for `terms` against the on-disk index: the probe scan
     * is pruned to the terms' bucket partitions, df comes from those
@@ -111,7 +98,7 @@ object IncrementalIndex {
         org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
           org.apache.spark.unsafe.types.UTF8String.fromString(t),
           org.apache.spark.sql.types.StringType, 42L), NBuckets.toLong).toInt)
-    val stats = readSub(spark, statsDir(root))
+    val stats = GenStore.read(spark, statsDir(root), "IncrementalIndex")
       .agg(sum(col("n_docs")).as("__n"), sum(col("sum_dl")).as("__sdl"))
       .select(col("__n"), (col("__sdl").cast("double") / col("__n")).as("__avgdl"))
     val matched = readPostings(spark, root)
@@ -149,25 +136,7 @@ object IncrementalIndex {
 
   /** Fold live batches of BOTH sub-stores into new generations. */
   def compact(spark: SparkSession, root: String): Unit = {
-    foldSub(spark, postingsDir(root), partitioned = true)
-    foldSub(spark, statsDir(root), partitioned = false)
-  }
-
-  private def foldSub(spark: SparkSession, dir: String,
-                      partitioned: Boolean): Unit = {
-    val prev = GenStore.latestCompaction(spark, dir)
-    val prevMax = prev.map(_._2).getOrElse(-1L)
-    val live = GenStore.liveBatchIds(spark, dir, prevMax)
-    val sources = prev.map { case (g, _) => GenStore.genDir(dir, g) }.toSeq ++
-      GenStore.nonEmptyPaths(spark, dir, live.map(b => s"$dir/batch=$b"))
-    if (live.nonEmpty && sources.nonEmpty) {
-      val newGen = prev.map(_._1).getOrElse(0L) + 1
-      val folded = sources.map(spark.read.parquet(_)).reduce(_ unionByName _)
-      val w = folded.write.mode("overwrite")
-      (if (partitioned) w.partitionBy("bucket") else w)
-        .parquet(GenStore.genDir(dir, newGen))
-      GenStore.commitManifest(spark, dir, newGen, live.max)
-    }
-    GenStore.cleanup(spark, dir)
+    GenStore.compact(spark, postingsDir(root), Seq(GenStore.Sub(partitionBy = Some("bucket"))))
+    GenStore.compact(spark, statsDir(root), Seq(GenStore.Sub()))
   }
 }

@@ -30,11 +30,14 @@ import graft.llm.SimSearch
   *  - the probed-bucket id set pulled to the driver is bounded by
   *    nCentroids (the KMeans-centroid gate), never by data.
   *
-  * Replay-idempotent like [[ContinuousTrainingPrep]]: each batch
-  * overwrites its own `batch=<id>` subdirectory, so a crash-replayed
-  * micro-batch rewrites identical files.
+  * Batches and generations follow [[GenStore]]; [[compact]] returns a
+  * probe of one bucket to one file (every micro-batch adds ≤1 small
+  * file per bucket, so after B batches it opens B files).
   */
 object IncrementalIvf {
+
+  private val Bucketed = GenStore.Sub(partitionBy = Some("bucket"))
+  private val Centroids = "centroids"
 
   /** Assign one arriving slice to buckets and commit it to the index.
     *
@@ -52,7 +55,7 @@ object IncrementalIvf {
     val c = SimSearch.unitized(batch.toDF(), idCol, embCol, idCol, "__ne")
     SimSearch.nearestBuckets(c, live, idCol, "__ne", 1)
       .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$indexDir/batch=$batchId")
+      .parquet(GenStore.batchDir(indexDir, batchId))
   }
 
   /** Wire an embeddings stream into the index. `autoCompactEvery` > 0
@@ -99,95 +102,23 @@ object IncrementalIvf {
     SimSearch.probeRank(probed, index, idCol, k)
   }
 
-  // ---------------------------------------------------------------------
-  // Compaction: fold the accumulated per-batch directories into one
-  // bucket-partitioned generation, so posting lists stop fragmenting
-  // (every micro-batch adds ≤1 small file per bucket; after B batches a
-  // probe of one bucket opens B files — compaction returns that to 1,
-  // sized at parquet's row-group sweet spot).
-  //
-  // Exactly-once protocol (the IncrementalPack/IncrementalCooccur
-  // discipline, applied to an index):
-  //  - generation data is written FIRST, to `_compacted/v=G` (the `_`
-  //    prefix hides it from any legacy whole-directory parquet scan);
-  //  - a one-line manifest `_compacted/v=G.manifest.json` (gen + the
-  //    max batch id folded in) is created AFTER the data via
-  //    write-temp-then-RENAME — the atomic commit point;
-  //  - folded `batch=N` directories are deleted only AFTER the manifest
-  //    commit, and deletion is idempotent.
-  // Crash anywhere: before the rename, readers never see v=G (no
-  // manifest) and a re-run overwrites the partial data; after the
-  // rename, readers already exclude the folded batches (reader filter
-  // is `batch id > manifest.maxBatch`), and a re-run just re-deletes.
-  // Restart mid-compaction therefore always yields an identical index
-  // (IncrementalIvfSpec pins this).
-  // ---------------------------------------------------------------------
-
-  // Protocol primitives shared with the other generation stores live in
-  // [[GenStore]]; only the fold itself (what a generation contains, how
-  // it partitions) is index-specific.
-
   /** The newest generation with a COMMITTED manifest (gen, maxBatch). */
   def latestCompaction(spark: SparkSession, indexDir: String): Option[(Long, Long)] =
     GenStore.latestCompaction(spark, indexDir)
 
   /** The index as one frame: latest committed generation + live batch
-    * directories. Falls back to the legacy whole-directory read when no
-    * compaction has ever run.
+    * directories.
     */
   def readIndex(spark: SparkSession, indexDir: String): DataFrame =
-    latestCompaction(spark, indexDir) match {
-      case None => spark.read.parquet(indexDir)
-      case Some((gen, maxBatch)) =>
-        val compacted = spark.read.parquet(GenStore.genDir(indexDir, gen))
-        // one single-root read per batch dir: sibling `batch=N` roots in
-        // one multi-path read trip partition discovery
-        // (CONFLICTING_DIRECTORY_STRUCTURES); per-root reads are
-        // unambiguous and union cheaply (no shuffle)
-        GenStore.nonEmptyPaths(spark, indexDir,
-            GenStore.liveBatchIds(spark, indexDir, maxBatch)
-              .map(b => s"$indexDir/batch=$b"))
-          .map(spark.read.parquet(_))
-          .foldLeft(compacted)(_ unionByName _)
-    }
+    GenStore.read(spark, indexDir, "IncrementalIvf")
 
-  /** Fold every live batch into generation latest+1. No-op (except the
-    * idempotent cleanup re-run) when nothing new arrived. Safe to call
-    * from a maintenance schedule concurrent with probes: readers switch
-    * atomically at the manifest rename.
+  /** Fold every live batch into generation latest+1, carrying refreshed
+    * centroids forward. Safe to call from a maintenance schedule
+    * concurrent with probes: readers switch atomically at the manifest
+    * rename.
     */
-  def compact(spark: SparkSession, indexDir: String): Unit = {
-    val prev = GenStore.latestCompaction(spark, indexDir)
-    val prevMax = prev.map(_._2).getOrElse(-1L)
-    val live = GenStore.liveBatchIds(spark, indexDir, prevMax)
-    // empty micro-batches fold trivially (no data, but the manifest's
-    // high-water mark still advances past them so cleanup removes them)
-    val sources = prev.map { case (g, _) => GenStore.genDir(indexDir, g) }.toSeq ++
-      GenStore.nonEmptyPaths(spark, indexDir, live.map(b => s"$indexDir/batch=$b"))
-    if (live.nonEmpty && sources.nonEmpty) {
-      val newGen = prev.map(_._1).getOrElse(0L) + 1
-      sources.map(spark.read.parquet(_)).reduce(_ unionByName _)
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(GenStore.genDir(indexDir, newGen))
-      // carry refreshed centroids forward: cleanup deletes EVERYTHING of
-      // superseded generations including `v=G.centroids`, and the folded
-      // data is still assigned in that centroid space — copy before the
-      // commit point so a crash in between leaves the old unit intact
-      prev.map(_._1).map(centroidsDir(indexDir, _))
-        .filter(d => GenStore.nonEmptyPaths(spark, indexDir, Seq(d)).nonEmpty)
-        .foreach { d =>
-          spark.read.parquet(d).write.mode("overwrite")
-            .parquet(centroidsDir(indexDir, newGen))
-        }
-      GenStore.commitManifest(spark, indexDir, newGen, live.max)
-    }
-    // cleanup AFTER commit; idempotent, also re-run after a crash that
-    // landed between the rename and the deletes
-    GenStore.cleanup(spark, indexDir)
-  }
-
-  private def centroidsDir(indexDir: String, gen: Long) =
-    s"${GenStore.compactedRoot(indexDir)}/v=$gen.centroids"
+  def compact(spark: SparkSession, indexDir: String): Unit =
+    GenStore.compact(spark, indexDir, Seq(Bucketed), Some(Centroids))
 
   /** Centroid REFRESH — the drift answer the frozen-index regime needs
     * eventually: re-learn centroids from the indexed corpus itself
@@ -196,9 +127,9 @@ object IncrementalIvf {
     * generation assigned to the refreshed centroids, which are stored
     * BESIDE the generation (`v=G.centroids`) so probes and subsequent
     * ingestion read index + centroids as one versioned unit
-    * ([[latestCentroids]]). The manifest rename is still the only
-    * commit point: a crash mid-refresh leaves the old index (and old
-    * centroids) fully visible.
+    * ([[latestCentroids]]). It folds the same captured read set as
+    * [[compact]] and commits through the same manifest rename
+    * ([[GenStore.commitRebuild]]).
     *
     * Spherical-Lloyd objective (Σ max-cosine) is monotone in the seeds
     * → means → refine chain, so a refresh never degrades the clustering
@@ -217,46 +148,26 @@ object IncrementalIvf {
     */
   def refresh(spark: SparkSession, indexDir: String, idCol: String,
               iters: Int = 2): DataFrame = {
-    val prev = GenStore.latestCompaction(spark, indexDir)
-    val prevMax = prev.map(_._2).getOrElse(-1L)
-    val live = GenStore.liveBatchIds(spark, indexDir, prevMax)
-    // fold the CAPTURED read set (mirroring compact), not a re-listing
-    // via readIndex: a micro-batch landing between two listings would be
-    // folded yet stay above the manifest high-water mark and be read
-    // twice ever after
-    val sources = prev.map { case (g, _) => GenStore.genDir(indexDir, g) }.toSeq ++
-      GenStore.nonEmptyPaths(spark, indexDir, live.map(b => s"$indexDir/batch=$b"))
-    val c = (if (prev.isEmpty && sources.isEmpty)
-        spark.read.parquet(indexDir) // legacy never-compacted layout
-      else sources.map(spark.read.parquet(_)).reduce(_ unionByName _))
+    val rs = GenStore.readSet(spark, indexDir)
+    val c = rs.read(spark)
       .select(col(idCol), col("__ne"),
         col("bucket").cast("long").as("bucket")).cache()
     val seeds = SimSearch.bucketMeans(c, idCol)
       .select(col("cent_id"), col("__new").as("cent_emb"))
     val cents = SimSearch.lloydIterate(c.select(col(idCol), col("__ne")),
       seeds, idCol, iters)
-    val newGen = prev.map(_._1).getOrElse(0L) + 1
-    SimSearch.nearestBuckets(c.select(col(idCol), col("__ne")), cents,
-        idCol, "__ne", 1)
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(GenStore.genDir(indexDir, newGen))
-    cents.write.mode("overwrite").parquet(centroidsDir(indexDir, newGen))
-    GenStore.commitManifest(spark, indexDir, newGen,
-      if (live.nonEmpty) live.max else prevMax)
-    GenStore.cleanup(spark, indexDir)
+    GenStore.commitRebuild(spark, rs, Bucketed,
+      SimSearch.nearestBuckets(c.select(col(idCol), col("__ne")), cents,
+        idCol, "__ne", 1), Centroids, cents)
     c.unpersist(blocking = false)
     cents
   }
 
   /** The centroid set committed with the newest generation, when that
-    * generation was produced by [[refresh]] (a plain [[compact]] keeps
-    * whatever centroids the caller holds).
+    * generation was produced by [[refresh]] or carried forward by
+    * [[compact]] (a never-refreshed index keeps whatever centroids the
+    * caller holds).
     */
   def latestCentroids(spark: SparkSession, indexDir: String): Option[DataFrame] =
-    GenStore.latestCompaction(spark, indexDir).flatMap { case (g, _) =>
-      val dir = centroidsDir(indexDir, g)
-      if (GenStore.nonEmptyPaths(spark, indexDir, Seq(dir)).nonEmpty)
-        Some(spark.read.parquet(dir))
-      else None
-    }
+    GenStore.latestSidecar(spark, indexDir, Centroids)
 }

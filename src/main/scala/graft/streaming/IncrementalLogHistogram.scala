@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
 import graft.ops.LogHistogram
@@ -16,31 +16,10 @@ import graft.ops.LogHistogram
   * Same contract class as [[IncrementalCountMin]]/[[IncrementalQuantile]]:
   * counts are plain integer sums — commutative across any batch split
   * (store ≡ one-shot histogram of the union) but NOT duplicate-
-  * immune, so exactly-once comes from the family's version-overwrite
-  * protocol: batch N OVERWRITES its own `v=N` derived only from
-  * `v=N-1` + the batch; a missing predecessor fails fast.
+  * immune, so exactly-once rests on the [[StoreProtocol]] version
+  * overwrite.
   */
 object IncrementalLogHistogram {
-
-  private def versionDir(storeDir: String, batchId: Long) = s"$storeDir/v=$batchId"
-
-  /** Histogram of store version `batchId − 1` (None for batch 0);
-    * fails fast when a non-initial predecessor is missing.
-    */
-  def readHistogram(spark: SparkSession, storeDir: String,
-                    batchId: Long): Option[DataFrame] = {
-    if (batchId == 0) return None
-    val prev = versionDir(storeDir, batchId - 1)
-    val prevPath = new org.apache.hadoop.fs.Path(prev)
-    val fs = prevPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(prevPath)) throw new IllegalStateException(
-      s"IncrementalLogHistogram store version missing: $prev does not " +
-        s"exist but batch $batchId is not the first. Refusing to restart " +
-        "the counts from only the live batch — restore the store or reset " +
-        "checkpoint+store together.")
-    StoreProtocol.requireCommitted(fs, prevPath, "IncrementalLogHistogram", batchId)
-    Some(spark.read.parquet(prev))
-  }
 
   /** Fold one batch of (group, value) rows into the store: version N's
     * counts = version N−1's + the batch's own histogram, per
@@ -56,7 +35,7 @@ object IncrementalLogHistogram {
     val spark = batch.sparkSession
     val bs = LogHistogram.histogram(batch.toDF(), groupCols, valueCol, m)
     val keys = groupCols :+ "bucket"
-    val merged = readHistogram(spark, storeDir, batchId) match {
+    val merged = StoreProtocol.readPrev(spark, storeDir, batchId, "IncrementalLogHistogram") match {
       case None => bs
       case Some(prev) =>
         bs.withColumnRenamed("cnt", "__bc")
@@ -65,8 +44,7 @@ object IncrementalLogHistogram {
             (coalesce(col("__bc"), lit(0L)) + coalesce(col("__pc"), lit(0L)))
               .as("cnt"): _*)
     }
-    merged.write.mode("overwrite").parquet(versionDir(storeDir, batchId))
-    spark.read.parquet(versionDir(storeDir, batchId))
+    StoreProtocol.commit(merged, storeDir, batchId)
   }
 
   /** Wire a (group, value) stream into the incremental maintainer. */

@@ -30,10 +30,7 @@ import graft.llm.SimSearch
   * only for a never-refreshed store — otherwise post-refresh batches
   * would encode in the superseded space while probes score in the new
   * one (IncrementalPqSpec pins post-refresh ingestion/probe equality).
-  *
-  * Exactly-once: identical to the [[GenStore]] family — batch
-  * directories overwrite idempotently on replay, generations commit by
-  * manifest rename, cleanup is post-commit and idempotent.
+  * Batches, generations and the codebook sidecar follow [[GenStore]].
   */
 object IncrementalPq {
 
@@ -44,19 +41,14 @@ object IncrementalPq {
   val NSub = 8
   val NCodes = 16
 
-  private def codebooksDir(storeDir: String, gen: Long) =
-    s"${GenStore.compactedRoot(storeDir)}/v=$gen.codebooks"
+  private val Codebooks = "codebooks"
 
   /** The codebooks committed with the newest generation, when that
-    * generation was produced by [[refresh]].
+    * generation was produced by [[refresh]] or carried forward by
+    * [[compact]].
     */
   def latestCodebooks(spark: SparkSession, storeDir: String): Option[DataFrame] =
-    GenStore.latestCompaction(spark, storeDir).flatMap { case (g, _) =>
-      val dir = codebooksDir(storeDir, g)
-      if (GenStore.nonEmptyPaths(spark, storeDir, Seq(dir)).nonEmpty)
-        Some(spark.read.parquet(dir))
-      else None
-    }
+    GenStore.latestSidecar(spark, storeDir, Codebooks)
 
   /** Train initial codebooks from a bootstrap corpus (the [[SimSearch.pqTopK]]
     * seeding + subspace-Lloyd discipline, factored through
@@ -97,7 +89,7 @@ object IncrementalPq {
     val live = latestCodebooks(batch.sparkSession, storeDir).getOrElse(books)
     val unit = SimSearch.unitized(batch.toDF(), idCol, embCol, idCol, "__ne")
     encode(unit, live, idCol, dim)
-      .write.mode("overwrite").parquet(s"$storeDir/batch=$batchId")
+      .write.mode("overwrite").parquet(GenStore.batchDir(storeDir, batchId))
   }
 
   /** Wire an embeddings stream into the store ([[GenStore.autoCompact]]
@@ -119,16 +111,7 @@ object IncrementalPq {
 
   /** The store as one frame: latest committed generation + live batches. */
   def readStore(spark: SparkSession, storeDir: String): DataFrame =
-    GenStore.latestCompaction(spark, storeDir) match {
-      case None => spark.read.parquet(storeDir)
-      case Some((gen, maxBatch)) =>
-        val compacted = spark.read.parquet(GenStore.genDir(storeDir, gen))
-        GenStore.nonEmptyPaths(spark, storeDir,
-            GenStore.liveBatchIds(spark, storeDir, maxBatch)
-              .map(b => s"$storeDir/batch=$b"))
-          .map(spark.read.parquet(_))
-          .foldLeft(compacted)(_ unionByName _)
-    }
+    GenStore.read(spark, storeDir, "IncrementalPq")
 
   /** Top-K probe: ADC over the stored codes (scan touches only the
     * (id, codes) columns), k·`rerankFactor` survivors rescored on the
@@ -157,40 +140,19 @@ object IncrementalPq {
   }
 
   /** Fold every live batch into generation latest+1, carrying the
-    * committed codebooks forward (cleanup deletes everything of
-    * superseded generations, and the folded codes are still assigned
-    * in that codebook space).
+    * committed codebooks forward ([[GenStore.compact]]): the folded
+    * codes are still assigned in that codebook space.
     */
-  def compact(spark: SparkSession, storeDir: String): Unit = {
-    val prev = GenStore.latestCompaction(spark, storeDir)
-    val prevMax = prev.map(_._2).getOrElse(-1L)
-    val live = GenStore.liveBatchIds(spark, storeDir, prevMax)
-    val sources = prev.map { case (g, _) => GenStore.genDir(storeDir, g) }.toSeq ++
-      GenStore.nonEmptyPaths(spark, storeDir, live.map(b => s"$storeDir/batch=$b"))
-    if (live.nonEmpty && sources.nonEmpty) {
-      val newGen = prev.map(_._1).getOrElse(0L) + 1
-      sources.map(spark.read.parquet(_)).reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(GenStore.genDir(storeDir, newGen))
-      prev.map(_._1).map(codebooksDir(storeDir, _))
-        .filter(d => GenStore.nonEmptyPaths(spark, storeDir, Seq(d)).nonEmpty)
-        .foreach { d =>
-          spark.read.parquet(d).write.mode("overwrite")
-            .parquet(codebooksDir(storeDir, newGen))
-        }
-      GenStore.commitManifest(spark, storeDir, newGen, live.max)
-    }
-    GenStore.cleanup(spark, storeDir)
-  }
+  def compact(spark: SparkSession, storeDir: String): Unit =
+    GenStore.compact(spark, storeDir, Seq(GenStore.Sub()), Some(Codebooks))
 
   /** Codebook REFRESH — the drift answer: retrain the codebooks from
     * the STORED full-precision vectors (id-order seeds + subspace
     * Lloyd, the exact [[trainCodebooks]] discipline over the captured
     * read set), re-encode every stored vector against them, and commit
-    * the rebuilt store + codebooks as one versioned generation. The
-    * manifest rename is the only commit point: a crash mid-refresh
-    * leaves the old store and old codebooks fully visible, and
-    * subsequent ingestion/probes resolve the refreshed set atomically
-    * ([[latestCodebooks]]).
+    * the rebuilt store + codebooks as one versioned generation
+    * ([[GenStore.commitRebuild]]); subsequent ingestion/probes resolve
+    * the refreshed set atomically ([[latestCodebooks]]).
     *
     * Cost: one full-store read + iters+1 assignment passes + one
     * rewrite — run at drift cadence, not batch cadence (the
@@ -201,30 +163,16 @@ object IncrementalPq {
     */
   def refresh(spark: SparkSession, storeDir: String, idCol: String,
               dim: Int, iters: Int = 2): DataFrame = {
-    val prev = GenStore.latestCompaction(spark, storeDir)
-    val prevMax = prev.map(_._2).getOrElse(-1L)
-    val live = GenStore.liveBatchIds(spark, storeDir, prevMax)
-    // captured read set, mirroring compact — a batch landing between
-    // listings must not be folded yet stay above the high-water mark
-    val sources = prev.map { case (g, _) => GenStore.genDir(storeDir, g) }.toSeq ++
-      GenStore.nonEmptyPaths(spark, storeDir, live.map(b => s"$storeDir/batch=$b"))
-    val c = (if (prev.isEmpty && sources.isEmpty)
-        spark.read.parquet(storeDir) // legacy never-compacted layout
-      else sources.map(spark.read.parquet(_)).reduce(_ unionByName _))
-      .select(col(idCol), col("__ne")).cache()
+    val rs = GenStore.readSet(spark, storeDir)
+    val c = rs.read(spark).select(col(idCol), col("__ne")).cache()
     val subs = SimSearch.pqSubSplit(c, idCol, "__ne", NSub, dim / NSub).cache()
     // spreadSeeds: store ids correlate with arrival order, so lowest-id
     // seeding would retrain on the OLDEST distribution — hash-spread
     // seeds represent the drifted tail too (SimSearch.pqTrainBooks doc)
     val books = SimSearch.pqTrainBooks(c, subs, idCol, NSub, dim / NSub,
       NCodes, iters, spreadSeeds = true)
-    val newGen = prev.map(_._1).getOrElse(0L) + 1
-    encode(c, books, idCol, dim)
-      .write.mode("overwrite").parquet(GenStore.genDir(storeDir, newGen))
-    books.write.mode("overwrite").parquet(codebooksDir(storeDir, newGen))
-    GenStore.commitManifest(spark, storeDir, newGen,
-      if (live.nonEmpty) live.max else prevMax)
-    GenStore.cleanup(spark, storeDir)
+    GenStore.commitRebuild(spark, rs, GenStore.Sub(), encode(c, books, idCol, dim),
+      Codebooks, books)
     subs.unpersist(blocking = false)
     c.unpersist(blocking = false)
     books

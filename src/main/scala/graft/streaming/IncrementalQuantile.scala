@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
 import graft.engine.expressions.QuantileSketch
@@ -15,35 +15,12 @@ import graft.engine.expressions.QuantileSketch
   * row-idempotent maxes), the grid cells are plain integer SUMS:
   * commutative across any batch order or partitioning — the store is
   * bit-identical to a one-shot sketch of the union — but NOT immune
-  * to duplicate delivery. Exactly-once therefore comes from the
-  * family's version-overwrite protocol: batch N OVERWRITES its own
-  * `v=N` derived only from `v=N-1` + the batch, so a replayed batch
-  * rewrites the same version instead of double-counting; a missing
-  * predecessor fails fast. Carries `n` (exact row count) beside each
+  * to duplicate delivery, so exactly-once rests on the
+  * [[StoreProtocol]] version overwrite. Carries `n` (exact row count) beside each
   * group's sketch — [[QuantileSketch.rank]]'s full-domain corner and
   * the rank→target conversion both need it.
   */
 object IncrementalQuantile {
-
-  private def versionDir(storeDir: String, batchId: Long) = s"$storeDir/v=$batchId"
-
-  /** Sketches of store version `batchId − 1` (None for batch 0); fails
-    * fast when a non-initial predecessor is missing.
-    */
-  def readSketches(spark: SparkSession, storeDir: String,
-                   batchId: Long): Option[DataFrame] = {
-    if (batchId == 0) return None
-    val prev = versionDir(storeDir, batchId - 1)
-    val prevPath = new org.apache.hadoop.fs.Path(prev)
-    val fs = prevPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(prevPath)) throw new IllegalStateException(
-      s"IncrementalQuantile store version missing: $prev does not exist " +
-        s"but batch $batchId is not the first. Refusing to restart the " +
-        "grids from only the live batch — restore the store or reset " +
-        "checkpoint+store together.")
-    StoreProtocol.requireCommitted(fs, prevPath, "IncrementalQuantile", batchId)
-    Some(spark.read.parquet(prev))
-  }
 
   /** Fold one batch of (group, value) rows into the store: version N's
     * grid = version N−1's grid + the batch's own sketch elementwise per
@@ -65,7 +42,7 @@ object IncrementalQuantile {
     val bs = batch.toDF().groupBy(groupCols.map(col): _*)
       .agg(QuantileSketch.sketch(col(valueCol), domainBits, depth, width).as("sk"),
         count(col(valueCol)).as("n"))
-    val merged = readSketches(spark, storeDir, batchId) match {
+    val merged = StoreProtocol.readPrev(spark, storeDir, batchId, "IncrementalQuantile") match {
       case None => bs
       case Some(prev) =>
         bs.withColumnRenamed("sk", "__bsk").withColumnRenamed("n", "__bn")
@@ -79,8 +56,7 @@ object IncrementalQuantile {
             (coalesce(col("__bn"), lit(0L)) + coalesce(col("__pn"), lit(0L)))
               .as("n")): _*)
     }
-    merged.write.mode("overwrite").parquet(versionDir(storeDir, batchId))
-    spark.read.parquet(versionDir(storeDir, batchId))
+    StoreProtocol.commit(merged, storeDir, batchId)
   }
 
   /** Wire a (group, value) stream into the incremental maintainer. */

@@ -25,8 +25,8 @@ import graft.ops.Scd2
   * addresses it. Closes are monotone facts (an open row closes at most
   * once, at one version, derived deterministically from the batch
   * sequence), so reconstruction is order-insensitive and replaying a
-  * batch rewrites identical delta files — the [[IncrementalPack]]
-  * exactly-once idiom.
+  * batch rewrites identical delta files. Batches and generations follow
+  * [[GenStore]].
   *
   * 100 TB shape: per batch, the current image (needed to diff) is
   * reconstructed from the store — one delta read (O(store) files until
@@ -36,35 +36,10 @@ import graft.ops.Scd2
   */
 object IncrementalScd2 {
 
-  private def batchDir(storeDir: String, id: Long) = f"$storeDir/batch=$id"
-
-  private def storeParts(spark: SparkSession, storeDir: String,
-                         upTo: Long): Seq[String] =
-    GenStore.latestCompaction(spark, storeDir) match {
-      case Some((g, mb)) =>
-        if (mb >= upTo) throw new IllegalStateException(
-          s"IncrementalScd2: batch $upTo would replay but generation $g already " +
-            s"folded batches <= $mb. Reset checkpoint+store together, " +
-            "or compact only between batches.")
-        GenStore.genDir(storeDir, g) +:
-          GenStore.liveBatchIds(spark, storeDir, mb).filter(_ < upTo)
-            .map(b => s"$storeDir/batch=$b")
-      case None =>
-        GenStore.liveBatchIds(spark, storeDir, -1L).filter(_ < upTo)
-          .map(b => s"$storeDir/batch=$b")
-    }
-
-  private def readSub(spark: SparkSession, storeDir: String,
-                      parts: Seq[String], sub: String): Option[DataFrame] = {
-    val ps = GenStore.nonEmptyPaths(spark, storeDir, parts.map(_ + "/" + sub))
-    if (ps.isEmpty) None
-    else Some(ps.map(spark.read.parquet(_)).reduce(_ unionByName _))
-  }
-
   private def historyFromParts(spark: SparkSession, storeDir: String,
                                parts: Seq[String], key: String): Option[DataFrame] =
-    readSub(spark, storeDir, parts, "opens").map { opens =>
-      readSub(spark, storeDir, parts, "closes") match {
+    GenStore.readSub(spark, storeDir, parts, "opens").map { opens =>
+      GenStore.readSub(spark, storeDir, parts, "closes") match {
         case None => opens
           .withColumn("valid_to", lit(null).cast("long"))
           .withColumn("is_current", lit(true))
@@ -81,7 +56,7 @@ object IncrementalScd2 {
                    attrs: Seq[String], storeDir: String): Unit = {
     val spark = batch.sparkSession
     val u = batch.select((key +: attrs).map(col): _*).dropDuplicates(key)
-    val prior = storeParts(spark, storeDir, batchId)
+    val prior = GenStore.storeParts(spark, storeDir, "IncrementalScd2", batchId)
     val hist = historyFromParts(spark, storeDir, prior, key)
     var cached: Option[DataFrame] = None
     val (opens, closes) = hist match {
@@ -104,7 +79,7 @@ object IncrementalScd2 {
           .select(col(key), col("valid_from"), lit(batchId).as("valid_to"))
         (opening, closed)
     }
-    val dir = batchDir(storeDir, batchId)
+    val dir = GenStore.batchDir(storeDir, batchId)
     opens.write.mode("overwrite").parquet(s"$dir/opens")
     closes.write.mode("overwrite").parquet(s"$dir/closes")
     cached.foreach(_.unpersist(blocking = false))
@@ -133,7 +108,7 @@ object IncrementalScd2 {
     */
   def history(spark: SparkSession, storeDir: String, key: String): DataFrame =
     historyFromParts(spark, storeDir,
-      storeParts(spark, storeDir, Long.MaxValue), key)
+      GenStore.storeParts(spark, storeDir, "IncrementalScd2"), key)
       .getOrElse(sys.error(s"IncrementalScd2 store empty: $storeDir"))
 
   /** Point-in-time image at `version` ([[Scd2.asOf]] over [[history]]). */
@@ -142,20 +117,6 @@ object IncrementalScd2 {
     Scd2.asOf(history(spark, storeDir, key), version)
 
   /** Fold live batch deltas into the next generation ([[GenStore]]). */
-  def compact(spark: SparkSession, storeDir: String): Unit = {
-    val prev = GenStore.latestCompaction(spark, storeDir)
-    val prevMax = prev.map(_._2).getOrElse(-1L)
-    val live = GenStore.liveBatchIds(spark, storeDir, prevMax)
-    if (live.nonEmpty) {
-      val newGen = prev.map(_._1).getOrElse(0L) + 1
-      val parts = prev.map { case (g, _) => GenStore.genDir(storeDir, g) }.toSeq ++
-        live.map(b => s"$storeDir/batch=$b")
-      val dst = GenStore.genDir(storeDir, newGen)
-      for (sub <- Seq("opens", "closes"))
-        readSub(spark, storeDir, parts, sub).foreach(
-          _.write.mode("overwrite").parquet(s"$dst/$sub"))
-      GenStore.commitManifest(spark, storeDir, newGen, live.max)
-    }
-    GenStore.cleanup(spark, storeDir)
-  }
+  def compact(spark: SparkSession, storeDir: String): Unit =
+    GenStore.compact(spark, storeDir, Seq(GenStore.Sub("opens"), GenStore.Sub("closes")))
 }

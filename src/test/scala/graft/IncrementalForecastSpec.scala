@@ -81,4 +81,12 @@ class IncrementalForecastSpec extends SparkSuite {
     assert(ex.getMessage.contains("out-of-order"),
       s"guard message: ${ex.getMessage}")
   }
+
+  test("backtest refuses a torn version instead of reading its partial files") {
+    val dir = store()
+    proc(Seq(("a", 0L, 10L), ("a", 1L, 12L)).toDF("k", "t", "v"), 0, dir)
+    Files.delete(java.nio.file.Paths.get(s"$dir/v=0/_SUCCESS"))
+    val torn = intercept[IllegalStateException] { bt(dir, 0) }
+    assert(torn.getMessage.contains("store version torn"), torn.getMessage)
+  }
 }

@@ -119,4 +119,20 @@ class IncrementalPqSpec extends SparkSuite {
       "post-refresh batch was encoded in the superseded codebook space")
     a.unpersist(); b.unpersist(); booksA.unpersist()
   }
+
+  test("compaction after a refresh deletes every entry of the superseded generation, codebooks included") {
+    val dir = Files.createTempDirectory("pq_cleanup").toString
+    val a = clustered(seed = 7, n = 120, idFrom = 0L)
+    val books = IncrementalPq.trainCodebooks(a, "vec_id", "embedding", dim)
+    IncrementalPq.processBatch(a, 0L, books, "vec_id", "embedding", dir, dim)
+    val refreshed = IncrementalPq.refresh(spark, dir, "vec_id", dim)  // generation 1
+    IncrementalPq.processBatch(clustered(seed = 7, n = 40, idFrom = 1000L), 1L, refreshed,
+      "vec_id", "embedding", dir, dim)
+    IncrementalPq.compact(spark, dir)                                  // generation 2
+    val names = new java.io.File(s"$dir/_compacted").list().toSeq
+    assert(names.contains("v=2.codebooks"), names)
+    assert(!names.exists(n => n == "v=1" || n.startsWith("v=1.")),
+      s"superseded generation 1 survived cleanup: $names")
+    assert(IncrementalPq.latestCodebooks(spark, dir).exists(_.count() == refreshed.count()))
+  }
 }
