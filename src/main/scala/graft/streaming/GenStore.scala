@@ -48,6 +48,7 @@ private[streaming] object GenStore {
     s"${genDir(storeDir, gen)}.manifest.json"
   private def sidecarDir(storeDir: String, gen: Long, name: String) =
     s"${genDir(storeDir, gen)}.$name"
+  private def subDir(part: String, sub: String) = if (sub.isEmpty) part else s"$part/$sub"
 
   /** A sub-store: directory `name` inside every part ("" = the part
     * itself), hive-partitioned by `partitionBy` when set.
@@ -141,8 +142,7 @@ private[streaming] object GenStore {
     */
   def readSub(spark: SparkSession, storeDir: String, parts: Seq[String],
               sub: String = ""): Option[DataFrame] = {
-    val ps = nonEmptyPaths(spark, storeDir,
-      parts.map(p => if (sub.isEmpty) p else s"$p/$sub"))
+    val ps = nonEmptyPaths(spark, storeDir, parts.map(subDir(_, sub)))
     if (ps.isEmpty) None else Some(ps.map(spark.read.parquet(_)).reduce(_ unionByName _))
   }
 
@@ -218,8 +218,7 @@ private[streaming] object GenStore {
     val dst = genDir(rs.storeDir, rs.gen)
     for ((s, df) <- data) {
       val w = df.write.mode("overwrite")
-      s.partitionBy.fold(w)(w.partitionBy(_))
-        .parquet(if (s.name.isEmpty) dst else s"$dst/${s.name}")
+      s.partitionBy.fold(w)(w.partitionBy(_)).parquet(subDir(dst, s.name))
     }
     for ((n, df) <- sidecar)
       df.write.mode("overwrite").parquet(sidecarDir(rs.storeDir, rs.gen, n))
